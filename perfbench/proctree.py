@@ -157,6 +157,13 @@ class PeakRss:
         self.peak_mb = max(self.peak_mb, snapshot().rss_mb)
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) ticks of the host's CPUs since boot: steal is the
+    time a hypervisor ran something else while this guest wanted a CPU."""
+    f = [int(x) for x in _read("/proc/stat").splitlines()[0].split()[1:]]
+    return f[7], sum(f[:8])
+
+
 def kill_leftovers(cwd: str) -> int:
     """Kill Spark JVMs and pyspark daemons/workers left by an earlier
     run in ``cwd``.  Matching is on /proc, never on a shell pattern, so

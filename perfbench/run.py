@@ -92,9 +92,9 @@ def prepare_env(cores: int) -> None:
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = "2g"
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(WORK, "local")
     os.environ["TMPDIR"] = tmp
-    os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        f'--driver-java-options "-Djava.io.tmpdir={tmp} -XX:-UsePerfData" '
-        "pyspark-shell")
+    # every JVM, the spark-submit launcher included: temp files under
+    # the checkout, no hsperfdata file in the system temp directory
+    os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
 
 
 def stop_spark(spark) -> None:
@@ -256,6 +256,7 @@ def run(spark, bench, args, cores, session_start_s, expected) -> int:
         layer_rows = []
         op_id = 0
         fails_in_a_row = 0
+        ticks0 = proctree.cpu_ticks()
         t_end = time.perf_counter() + args.seconds
         while True:
             tracer = on if (args.trace and op_id % 2 == 1) else off
@@ -269,6 +270,7 @@ def run(spark, bench, args, cores, session_start_s, expected) -> int:
             if fails_in_a_row >= MAX_FAILS_IN_A_ROW or (
                     time.perf_counter() >= t_end and op_id >= MIN_OPS):
                 break
+        steal, total = (b - a for a, b in zip(ticks0, proctree.cpu_ticks()))
         if reference["value"] is not None:
             errors.extend(w.final_check(reference["value"]))
         once = w.once_probes(on) if args.trace else {}
@@ -288,6 +290,8 @@ def run(spark, bench, args, cores, session_start_s, expected) -> int:
         "op_s": {"median": op_s, "n": len(good), "walls": walls},
         "op_cpu_s": {"median": op_cpu_s, "n": len(good)},
         "fail_share": failed / attempted,
+        # co-tenant load while the timed ops ran
+        "steal_share": steal / total if total else 0.0,
         "host": host_fingerprint(cores),
         "errors": errors[:5],
     }
