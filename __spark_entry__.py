@@ -556,10 +556,15 @@ def _banded_candidates(sh, seed_prefix: str):
     r=2 banding: per band b, two independent min-hash families
     ("<prefix><b>a:" / "<prefix><b>b:"); a pair is a candidate only
     when BOTH mins of some band agree.  The 4 band columns melt into
-    (band, band_val) rows and self-join ONCE — identical subplans on
-    both sides so the shuffle is computed once and reused
-    (ReusedExchange); a per-band union of self-joins re-evaluated the
-    shingle aggregation 8 times (~19 s at sf0.1 in BENCH_r05).
+    (band, band_val) rows and self-join ONCE; a per-band union of
+    self-joins re-evaluated the shingle aggregation 8 times (~19 s at
+    sf0.1 in BENCH_r05).  The self-join plans as a BroadcastHashJoin
+    with no ReusedExchange: its build side recomputes the scan,
+    explode and min-md5 subtree.  That is the wall-optimal shape at
+    bench scale — the build side runs concurrently with the probe
+    side on otherwise idle cores, and forcing reuse (shuffle-hash
+    hint) or materializing ``mh`` (localCheckpoint) measured slower
+    (OPTIMIZATION_r06.md).
     Returns (d1, d2, sz1, sz2) distinct pairs, d1 < d2."""
     mh = sh.groupBy("doc_id").agg(
         *[F.min(F.md5(F.concat(F.lit(f"{seed_prefix}{b}{t}:"),

@@ -5,7 +5,6 @@ measurement; everything exploratory lives here).
 Usage:
   python bench_extra.py queries [name ...]   # min-of-2 noop-sink timing
   python bench_extra.py plans  [name ...]    # .explain("formatted") dump
-  python bench_extra.py tile_phases          # per-phase tile_build timing
 
 Timing methodology matches bench.py (min of 2 wall-clock runs of
 construct+execute) but sinks through noop (guide §1.4) instead of
@@ -85,56 +84,6 @@ def cmd_plans(names, outdir="plans/r06", suffix="before"):
     spark.stop()
 
 
-def cmd_tile_phases():
-    """Per-phase wall time of the flagship build at the bench's scale."""
-    from tippecanoe_spark.config import TileConfig
-    from tippecanoe_spark.io.pages import extract_features_df, pages_df
-    from tippecanoe_spark.pipeline import (assign_minzoom_spark, build_tiles,
-                                           cascade_all_zooms)
-    from tippecanoe_spark.operators.tiler import (can_prefilter_dropped,
-                                                  can_shrink_dropped)
-
-    spark = _spark()
-    n_pages = 20000
-    cfg = TileConfig(maxzoom=9)
-    # warm
-    from bench import run_tile_build
-
-    run_tile_build(spark, 500, maxzoom=5)
-
-    res = {}
-    for rep in range(2):
-        pages = pages_df(spark, n_pages, seed=42)
-        feats = extract_features_df(spark, pages, cfg).persist()
-        feats.count()
-
-        t0 = time.time()
-        spark.sparkContext.setJobDescription("phase:minzoom")
-        df = assign_minzoom_spark(feats, cfg)
-        t1 = time.time()
-        spark.sparkContext.setJobDescription("phase:cascade")
-        prefilter = can_prefilter_dropped(cfg)
-        shrink = (not prefilter) and can_shrink_dropped(cfg)
-        par = spark.sparkContext.defaultParallelism
-        df2 = df.repartition(par * 2)
-        allz = cascade_all_zooms(df2, cfg, prefilter, shrink)
-        allz.write.format("noop").mode("overwrite").save()
-        t2 = time.time()
-        spark.sparkContext.setJobDescription("phase:full_build")
-        tiles = build_tiles(spark, feats, cfg)
-        n = tiles.count()
-        t3 = time.time()
-        feats.unpersist()
-        cur = {"minzoom_s": round(t1 - t0, 3),
-               "cascade_noop_s": round(t2 - t1, 3),
-               "full_build_s": round(t3 - t2, 3), "tiles": n}
-        for k, v in cur.items():
-            if k not in res or (isinstance(v, float) and v < res[k]):
-                res[k] = v
-    print(json.dumps(res))
-    spark.stop()
-
-
 def main():
     if len(sys.argv) < 2:
         print(__doc__)
@@ -149,8 +98,6 @@ def main():
             suffix = "after"
             args = args[1:]
         cmd_plans(args, suffix=suffix)
-    elif cmd == "tile_phases":
-        cmd_tile_phases()
     else:
         raise SystemExit(f"unknown command {cmd}")
 

@@ -334,3 +334,61 @@ def test_spark_maintainer_guard(spark, tmp_path):
     with pytest.raises(NotImplementedError):
         SparkTileMaintainer(spark, TileConfig(maxzoom=5, drop_densest=True),
                             str(tmp_path / "s"))
+
+
+def test_spark_maintainer_crawl_batches_equal_batch_build(spark, tmp_path):
+    """Crawl-order page batches on a z9 store touch hundreds of
+    partition buckets: the kept-tile filter must stay one term per zoom
+    (one per bucket overflowed the JVM stack), and every batch after
+    the first must still commit (a failed batch once left its fmz
+    snapshot behind, so the next one hit PATH_ALREADY_EXISTS)."""
+    from tippecanoe_spark.io.pages import extract_features_df, pages_df
+    from tippecanoe_spark.pipeline import build_tiles
+    from tippecanoe_spark.streaming.maintenance import SparkTileMaintainer
+
+    cfg = TileConfig(maxzoom=9)
+    feats = extract_features_df(spark, pages_df(spark, 550, seed=42), cfg)
+    m = SparkTileMaintainer(spark, cfg, str(tmp_path / "store"))
+    m.apply_batch(feats.filter("seq < 500"))
+    buckets = []
+    for lo in (500, 525):
+        aff = m.apply_batch(feats.filter(f"seq >= {lo} AND seq < {lo + 25}"))
+        buckets.append(len({m._bucket(*t) for t in aff}))
+    assert min(buckets) > 100, buckets
+    want = {(r["z"], r["x"], r["y"]): bytes(r["tile"])
+            for r in build_tiles(spark, feats, cfg).collect()}
+    assert m.tiles() == want
+
+
+def test_spark_maintainer_recovers_after_failed_batch(spark, tmp_path,
+                                                      monkeypatch):
+    """A batch that fails during its rebuild leaves the store usable:
+    the next batch commits, and picks up the failed batch's features
+    (already appended to the store) as new."""
+    import json
+    import random
+
+    import tippecanoe_spark.pipeline as pipeline
+    from tippecanoe_spark.streaming.maintenance import SparkTileMaintainer
+
+    rng = random.Random(5)
+    cfg = TileConfig(maxzoom=4)
+    feats = feature_records("\n".join(json.dumps({
+        "type": "Feature", "properties": {"i": i},
+        "geometry": {"type": "Point", "coordinates": [
+            round(rng.uniform(-170, 170), 6), round(rng.uniform(-70, 70), 6)]}})
+        for i in range(300)), "pts", cfg)
+
+    m = SparkTileMaintainer(spark, cfg, str(tmp_path / "store"))
+    m.apply_batch(_batch_df(spark, feats[:200]))
+
+    def broken(*_a, **_k):
+        raise RuntimeError("rebuild failed")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(pipeline, "build_tiles", broken)
+        with pytest.raises(RuntimeError):
+            m.apply_batch(_batch_df(spark, feats[200:250]))
+    m.apply_batch(_batch_df(spark, feats[250:]))
+    want = build_tiles_local([dict(f) for f in feats], cfg)
+    assert m.tiles() == want

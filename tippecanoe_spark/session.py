@@ -37,4 +37,8 @@ def get_spark(app: str = "tippecanoe-spark", master: str | None = None,
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    if master == "local" or master.startswith("local["):
+        # local workers see the package on PYTHONPATH (set above) from
+        # the daemon's start; elsewhere it may arrive only by --py-files
+        b = b.config("spark.python.daemon.module", "tippecanoe_spark.pyworker")
     return b.getOrCreate()

@@ -318,9 +318,6 @@ class SparkTileMaintainer:
         affected = {(r["z"], r["x"], r["y"]) for r in aff_df.collect()}
         self.last_affected = affected
 
-        new_fmz_dir = self._path(f"fmz_v{self.version + 1}")
-        withf.select("ix", "seq", "fmz").write.parquet(new_fmz_dir)
-
         tiles_dir = self._path("tiles")
         if affected:
             aff = spark.createDataFrame(
@@ -334,13 +331,18 @@ class SparkTileMaintainer:
             out = self._with_buckets(rebuilt)
             have_store = os.path.exists(tiles_dir)
             if have_store:
-                # plain (pz = a AND pxy = b) disjunction over the
-                # partition columns — prunable by the parquet source
+                # one (pz = z AND pxy IN (...)) term per zoom over the
+                # partition columns — prunable by the parquet source,
+                # and at most maxzoom + 1 terms (one term per bucket
+                # nests hundreds of ORs and overflows the JVM stack)
                 from functools import reduce
 
+                by_zoom: dict = {}
+                for (pz, pxy) in aff_buckets:
+                    by_zoom.setdefault(pz, []).append(pxy)
                 in_aff = reduce(lambda a, b: a | b,
-                                [(F.col("pz") == pz) & (F.col("pxy") == pxy)
-                                 for (pz, pxy) in aff_buckets])
+                                [(F.col("pz") == pz) & F.col("pxy").isin(pxys)
+                                 for pz, pxys in by_zoom.items()])
                 # (pz, pxy) are partition columns: this scan is pruned
                 # to the affected bucket dirs only
                 kept = (spark.read.parquet(tiles_dir).filter(in_aff)
@@ -365,6 +367,10 @@ class SparkTileMaintainer:
                         if os.path.exists(d):
                             shutil.rmtree(d)
 
+        # the snapshot goes last: a batch that fails before this line
+        # leaves no fmz_v{N+1} behind to collide with the next batch
+        (withf.select("ix", "seq", "fmz").write.mode("overwrite")
+            .parquet(self._path(f"fmz_v{self.version + 1}")))
         self.version += 1
         if os.path.exists(prev_dir):
             shutil.rmtree(prev_dir)
